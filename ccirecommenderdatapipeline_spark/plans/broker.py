@@ -136,6 +136,7 @@ def q_stream_execution_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from ..sources.execution_feed import register as register_feed
+    from ..streaming.jobs import run_stream
 
     register_feed(spark)
     checkpoint = tempfile.mkdtemp(prefix="exec_feed_ckpt_")
@@ -145,18 +146,14 @@ def q_stream_execution_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     def stage(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("append").parquet(staging)
 
+    feed = (
+        spark.readStream.format("execution_feed")
+        .option("total", TOTAL_EXECS)
+        .option("batch", page)
+        .load()
+    )
     while True:
-        q = (
-            spark.readStream.format("execution_feed")
-            .option("total", TOTAL_EXECS)
-            .option("batch", page)
-            .load()
-            .writeStream.foreachBatch(stage)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-        q.awaitTermination()
+        q = run_stream(feed, foreach_batch=stage, checkpoint=checkpoint)
         if sum(p["numInputRows"] for p in q.recentProgress) < page:
             break
     return spark.read.schema(

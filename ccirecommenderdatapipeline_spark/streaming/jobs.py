@@ -1,7 +1,23 @@
-"""Structured Streaming jobs over the ``events`` table (SURVEY.md §2.9
+"""Structured Streaming jobs over the fixture tables (SURVEY.md §2.9
 T1-T6: the reference approximates streaming with cron-scheduled incremental
 batch, daily_function.py:127-133, 466-516; app.py:98-109 — here the same
 semantics run as real streams with watermarks + checkpoints).
+
+One runner: every job starts its query through :func:`run_stream` — the
+only writeStream -> trigger(availableNow) -> checkpoint -> awaitTermination
+site in the package (tests/test_streaming.py pins that). It writes to a
+memory sink (``run_to_memory``) or to a ``foreachBatch`` writer, and a
+checkpoint it generated itself is deleted once the query terminates.
+Around it sit one file-source reader (``events_stream``), one staging
+helper (``_stage``: output path keyed on the source's absolute path, plus
+an idempotence marker) and one additively-merged versioned view
+(``additive_view_batch`` / ``latest_view``).
+
+State-partition rule: every stream runs with ``spark.sql.shuffle.partitions``
+scoped to STREAM_STATE_PARTITIONS (8). A stateful operator materializes one
+state-store instance per shuffle partition per micro-batch, so the count
+tracks state volume, not scan width; results never depend on it (every
+streaming operator here is partition-count-invariant and oracle-checked).
 
 Event-time columns are emitted as epoch MICROSECONDS (bigint): the testdata
 parquet is TIMESTAMP(NANOS), which both Spark (via nanosAsLong, see
@@ -17,17 +33,33 @@ result.
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import hashlib
 import os
+import shutil
+import tempfile
+import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.windows import bounded_window
+from ..sources.tables import load_table
 
 GAP_US = 1_800_000_000          # 30-minute session gap
 HOUR_US = 3_600_000_000
 
 STAGE_ROOT = "/tmp/spark_graft_streaming"
+
+# Streaming STATE partition count (see the module docstring): state
+# stores are created per shuffle partition per micro-batch, so at the
+# batch side's 32 the stream-stream outer join spent 3x its runtime on
+# empty state-store instances (33.6 s -> 10.9 s at 8). Results do not
+# depend on the count.
+STREAM_STATE_PARTITIONS = 8
 
 
 def exact_value_sum(col: str = "value") -> F.Column:
@@ -35,29 +67,120 @@ def exact_value_sum(col: str = "value") -> F.Column:
     return F.sum(F.round(F.col(col), 6).cast("decimal(18,6)")).cast("double")
 
 
-def stage_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
-    """Materialize events (ts converted to micros) as an n-file parquet
-    directory for file-source streaming. Idempotent per sf_dir."""
-    from ..sources.tables import load_table
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set session confs for the block, then restore each previous value
+    (unsetting keys that were unset). Safe because jobs run sequentially
+    per session; a concurrent harness would size per job in its
+    scheduler instead."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    # v2: staged files written before the NTZ normalization in load_table
-    # carry a TIMESTAMP_NTZ ts that watermarks reject — never reuse them.
-    out = os.path.join(STAGE_ROOT, f"{tag}_events_v2_{n_files}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "events").repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(out)
-    return out
+
+def run_stream(
+    plan: DataFrame,
+    *,
+    foreach_batch: Callable[[DataFrame, int], None] | None = None,
+    output_mode: str = "append",
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """Run ``plan`` with trigger(availableNow) until every staged input is
+    processed and return the terminated query (its ``recentProgress``
+    stays readable). Without ``foreach_batch`` the sink is an in-memory
+    table named by the query's ``strm_<10 hex>`` name. A checkpoint the
+    caller passes is kept for restarts; one generated here (under
+    STAGE_ROOT/ckpt, read at call time) can never be resumed and is
+    deleted once the query terminates."""
+    name = f"strm_{uuid.uuid4().hex[:10]}"
+    generated = checkpoint is None
+    if generated:
+        checkpoint = os.path.join(STAGE_ROOT, "ckpt", name)
+    writer = (
+        plan.writeStream.outputMode(output_mode)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint)
+    )
+    if foreach_batch is None:
+        writer = writer.format("memory").queryName(name)
+    else:
+        writer = writer.foreachBatch(foreach_batch)
+    sized = {"spark.sql.shuffle.partitions": str(STREAM_STATE_PARTITIONS)}
+    try:
+        with scoped_conf(plan.sparkSession, sized):
+            q = writer.start()
+            q.awaitTermination()
+    finally:
+        if generated:
+            shutil.rmtree(checkpoint, ignore_errors=True)
+    return q
+
+
+def run_to_memory(
+    plan: DataFrame,
+    output_mode: str = "complete",
+    checkpoint: str | None = None,
+) -> DataFrame:
+    """``run_stream`` into the memory sink; returns the result table as a
+    batch DataFrame."""
+    q = run_stream(plan, output_mode=output_mode, checkpoint=checkpoint)
+    return plan.sparkSession.table(q.name)
 
 
 def events_stream(spark: SparkSession, staged_dir: str, **options) -> DataFrame:
+    """File-source stream over any staged parquet directory (events,
+    documents, orders, price batches), with the batch-inferred schema and
+    reader ``options`` (e.g. ``maxFilesPerTrigger=1`` for one micro-batch
+    per staged file)."""
     schema = spark.read.parquet(staged_dir).schema
     reader = spark.readStream.schema(schema)
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.parquet(staged_dir)
+
+
+def _stage(sf_dir: str, name: str, build: Callable[[str], None]) -> str:
+    """Staged copy ``name`` of the fixture at ``sf_dir``: the directory is
+    keyed on the source's normalized ABSOLUTE path (two fixtures that share
+    a basename never share a staged copy), and ``build(out)`` runs only
+    while the ``_STAGED`` marker is absent — it is written after a build
+    returns, so a build that died halfway is redone, never reused."""
+    src = os.path.abspath(sf_dir)
+    key = hashlib.sha1(src.encode()).hexdigest()[:10]
+    out = os.path.join(STAGE_ROOT, f"{os.path.basename(src)}_{key}_{name}")
+    marker = os.path.join(out, "_STAGED")
+    if not os.path.exists(marker):
+        build(out)
+        open(marker, "w").close()
+    return out
+
+
+def _run_dir(tag: str) -> str:
+    """A fresh per-run output directory under STAGE_ROOT (sketch logs,
+    view versions) — it outlives the call, since the returned DataFrame
+    reads it lazily."""
+    return os.path.join(STAGE_ROOT, f"{tag}_{uuid.uuid4().hex[:10]}")
+
+
+def stage_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
+    """Materialize events (ts converted to micros) as an n-file parquet
+    directory for file-source streaming. Idempotent per sf_dir."""
+    return _stage(
+        sf_dir,
+        f"events_{n_files}",
+        lambda out: load_table(spark, sf_dir, "events")
+        .repartition(n_files)
+        .write.mode("overwrite")
+        .parquet(out),
+    )
 
 
 def tumbling_agg_plan(events: DataFrame) -> DataFrame:
@@ -77,65 +200,6 @@ def tumbling_agg_plan(events: DataFrame) -> DataFrame:
             "n_events", "sum_value",
         )
     )
-
-
-# Streaming STATE partition count — a deployment sizing knob, not a
-# semantic: a stateful operator materializes one state-store instance
-# (RocksDB/HDFS dir, checkpoint files, task) per shuffle partition PER
-# micro-batch, so partition count should track state VOLUME. The batch
-# side's 32 is right for the scan-heavy work, but this fixture's
-# streaming state is kilobytes — at 32 partitions the stream-stream
-# outer join spent 3x its runtime on empty state-store instances
-# (33.6 s -> 10.9 s at 8, identical results; every streaming op here is
-# partition-count-invariant BY DESIGN and oracle-checked). On a real
-# cluster this is exactly the knob you size per job — results never
-# depend on it.
-STREAM_STATE_PARTITIONS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "8")
-)
-
-
-class state_sized:
-    """Context manager: run a streaming job with state-sized shuffle
-    partitioning, restoring the session default afterwards. Safe here
-    because jobs run sequentially per session; a concurrent harness would
-    set this per-job via its scheduler instead."""
-
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set(
-            "spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS)
-        )
-        return self
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
-
-
-def run_to_memory(
-    plan: DataFrame,
-    output_mode: str = "complete",
-    checkpoint: str | None = None,
-) -> DataFrame:
-    """Execute a streaming plan with trigger(availableNow) into a memory
-    sink; blocks until all staged data is processed and returns the result
-    table as a batch DataFrame."""
-    name = f"strm_{uuid.uuid4().hex[:10]}"
-    with state_sized(plan.sparkSession):
-        q = (
-            plan.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint or os.path.join(STAGE_ROOT, "ckpt", name))
-            .start()
-        )
-        q.awaitTermination()
-    return plan.sparkSession.table(name)
 
 
 def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,8 +229,11 @@ def upsert_foreach_batch(target_dir: str):
 
 
 def read_upsert_target(spark: SparkSession, target_dir: str, key: str = "event_id") -> DataFrame:
-    """Latest-version view over the upsert log (keep max __batch_id per key,
-    ties broken arbitrarily-but-deterministically by full ordering)."""
+    """Latest-version view over the upsert log: one row per key, from its
+    max ``__batch_id``. The window orders by ``__batch_id`` alone, so two
+    rows of one key in the SAME batch tie and either may win — callers are
+    correct only when such duplicates are identical (``stream_merge_upsert``:
+    at-least-once re-deliveries are byte-identical copies)."""
     from pyspark.sql import Window
 
     log = spark.read.parquet(target_dir)
@@ -216,16 +283,12 @@ def stateful_user_counts(spark: SparkSession, staged_dir: str, checkpoint: str) 
     )
 
     capture_dir = checkpoint.rstrip("/") + "_capture"
-
-    with state_sized(counts.sparkSession):
-        q = (
-            counts.writeStream.foreachBatch(upsert_foreach_batch(capture_dir))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(
+        counts,
+        foreach_batch=upsert_foreach_batch(capture_dir),
+        output_mode="update",
+        checkpoint=checkpoint,
+    )
     return read_upsert_target(spark, capture_dir, key="user_id").select(
         "user_id", "n_events"
     )
@@ -236,46 +299,40 @@ def stage_price_batches(spark: SparkSession, sf_dir: str, n_batches: int = 3) ->
     per range, ascending mtimes) so the file source replays history in
     event-time order — the shape of the reference's daily incremental
     fetches (T2)."""
-    import shutil
-    import time as _time
-
     from ..sources.prices import prices_view
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, f"{tag}_price_batches_{n_batches}")
-    if os.path.exists(os.path.join(out, "_STAGED")):
-        return out
-    shutil.rmtree(out, ignore_errors=True)
-    os.makedirs(out, exist_ok=True)
-    prices = prices_view(spark, sf_dir)
-    dates = [r[0] for r in prices.select("date").distinct().orderBy("date").collect()]
-    step = max(1, len(dates) // n_batches)
-    # Deduplicate bounds: with fewer distinct dates than batches the index
-    # arithmetic repeats a date, which would make an empty [lo, hi) range —
-    # strictly-increasing bounds guarantee every staged batch is non-empty.
-    bounds: list = []
-    for i in range(1, n_batches):
-        b = dates[min(i * step, len(dates) - 1)]
-        if not bounds or b > bounds[-1]:
-            bounds.append(b)
-    bounds.append(None)
-    lo = None
-    for i, hi in enumerate(bounds):
-        part = prices
-        if lo is not None:
-            part = part.filter(F.col("date") >= F.lit(lo))
-        if hi is not None:
-            part = part.filter(F.col("date") < F.lit(hi))
-        tmp = os.path.join(out, f"__tmp_{i}")
-        part.coalesce(1).write.mode("overwrite").parquet(tmp)
-        srcs = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
-        if srcs:  # an empty write may emit no part file; skip, don't crash
-            shutil.move(os.path.join(tmp, srcs[0]), os.path.join(out, f"b{i}.parquet"))
-        shutil.rmtree(tmp)
-        _time.sleep(1.1)  # distinct mtimes -> deterministic file order
-        lo = hi
-    open(os.path.join(out, "_STAGED"), "w").close()
-    return out
+    def build(out: str) -> None:
+        shutil.rmtree(out, ignore_errors=True)
+        os.makedirs(out)
+        prices = prices_view(spark, sf_dir)
+        dates = [r[0] for r in prices.select("date").distinct().orderBy("date").collect()]
+        step = max(1, len(dates) // n_batches)
+        # Deduplicate bounds: with fewer distinct dates than batches the index
+        # arithmetic repeats a date, which would make an empty [lo, hi) range —
+        # strictly-increasing bounds guarantee every staged batch is non-empty.
+        bounds: list = []
+        for i in range(1, n_batches):
+            b = dates[min(i * step, len(dates) - 1)]
+            if not bounds or b > bounds[-1]:
+                bounds.append(b)
+        bounds.append(None)
+        lo = None
+        for i, hi in enumerate(bounds):
+            part = prices
+            if lo is not None:
+                part = part.filter(F.col("date") >= F.lit(lo))
+            if hi is not None:
+                part = part.filter(F.col("date") < F.lit(hi))
+            tmp = os.path.join(out, f"__tmp_{i}")
+            part.coalesce(1).write.mode("overwrite").parquet(tmp)
+            srcs = [f for f in os.listdir(tmp) if f.endswith(".parquet")]
+            if srcs:  # an empty write may emit no part file; skip, don't crash
+                shutil.move(os.path.join(tmp, srcs[0]), os.path.join(out, f"b{i}.parquet"))
+            shutil.rmtree(tmp)
+            time.sleep(1.1)  # distinct mtimes -> deterministic file order
+            lo = hi
+
+    return _stage(sf_dir, f"price_batches_{n_batches}", build)
 
 
 def stateful_cci_stream(spark: SparkSession, staged_dir: str, checkpoint: str) -> DataFrame:
@@ -292,12 +349,7 @@ def stateful_cci_stream(spark: SparkSession, staged_dir: str, checkpoint: str) -
 
     n = 20  # CCI_NDAYS; literal so the closure stays self-contained
 
-    schema = spark.read.parquet(staged_dir).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged_dir)
-    )
+    sdf = events_stream(spark, staged_dir, maxFilesPerTrigger=1)
 
     out_schema = T.StructType([
         T.StructField("symbol", T.StringType()),
@@ -348,31 +400,24 @@ def stateful_cci_stream(spark: SparkSession, staged_dir: str, checkpoint: str) -
     # arrives in, so the union of batch appends IS the full output — no
     # per-key version resolution needed, just drop the batch tag.
     capture_dir = checkpoint.rstrip("/") + "_capture"
-
-    with state_sized(plan.sparkSession):
-        q = (
-            plan.writeStream.foreachBatch(upsert_foreach_batch(capture_dir))
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint)
-            .start()
-        )
-        q.awaitTermination()
+    run_stream(
+        plan,
+        foreach_batch=upsert_foreach_batch(capture_dir),
+        output_mode="update",
+        checkpoint=checkpoint,
+    )
     return spark.read.parquet(capture_dir).drop("__batch_id")
 
 
 def stage_events_dup_dir(spark: SparkSession, sf_dir: str) -> str:
     """Stage events with every row delivered TWICE (the at-least-once
     re-delivery shape brokers produce) for watermark-dedup streaming."""
-    from ..sources.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, f"{tag}_events_dup_v2")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
+    def build(out: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         ev.unionByName(ev).repartition(4).write.mode("overwrite").parquet(out)
-    return out
+
+    return _stage(sf_dir, "events_dup", build)
 
 
 def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -426,10 +471,10 @@ def _file_min_ts_key(spark: SparkSession, path: str):
     return (m is not None, m)
 
 
-def attribution_join_plan(purchases: DataFrame, clicks: DataFrame) -> DataFrame:
-    """Interval (event-time range) join: each purchase matched to the same
-    user's clicks in the preceding ATTRIB_GAP_HOURS. Identical plan code
-    for the batch and stream-stream forms."""
+def _interval_join(purchases: DataFrame, clicks: DataFrame, how: str) -> DataFrame:
+    """Each purchase joined (``how``) to the same user's clicks in the
+    preceding ATTRIB_GAP_HOURS — the event-time range condition that lets
+    a stream-stream join expire its state."""
     p = purchases.select(
         F.col("event_id").alias("purchase_id"),
         F.col("user_id").alias("p_user"),
@@ -440,13 +485,21 @@ def attribution_join_plan(purchases: DataFrame, clicks: DataFrame) -> DataFrame:
         F.col("user_id").alias("c_user"),
         F.col("ts").alias("c_ts"),
     )
+    return p.join(
+        c,
+        (F.col("p_user") == F.col("c_user"))
+        & (F.col("c_ts") <= F.col("p_ts"))
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"interval {ATTRIB_GAP_HOURS} hours")),
+        how,
+    )
+
+
+def attribution_join_plan(purchases: DataFrame, clicks: DataFrame) -> DataFrame:
+    """Interval (event-time range) join: each purchase matched to the same
+    user's clicks in the preceding ATTRIB_GAP_HOURS. Identical plan code
+    for the batch and stream-stream forms."""
     return (
-        p.join(
-            c,
-            (F.col("p_user") == F.col("c_user"))
-            & (F.col("c_ts") <= F.col("p_ts"))
-            & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"interval {ATTRIB_GAP_HOURS} hours")),
-        )
+        _interval_join(purchases, clicks, "inner")
         .select(
             "purchase_id", "click_id",
             F.col("p_user").alias("user_id"),
@@ -481,8 +534,6 @@ def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     to micro-batch boundaries — so the plain batch GROUP BY is an exact
     oracle for the stateful streaming execution. The capture dir outlives
     the call (the returned DataFrame reads it lazily)."""
-    import tempfile
-
     staged = stage_events_dir(spark, sf_dir)
     checkpoint = tempfile.mkdtemp(prefix="stateful_counts_ckpt_")
     final = stateful_user_counts(spark, staged, checkpoint)
@@ -499,8 +550,6 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     each micro-batch hash-joins against the static side (broadcast at this
     dim size), no watermark needed — the canonical enrich-before-aggregate
     streaming shape."""
-    from ..sources.tables import load_table
-
     staged = stage_events_dir(spark, sf_dir)
     sdf = events_stream(spark, staged)
     users = (
@@ -532,23 +581,12 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     Delta-free upsert. Duplicate deliveries are byte-identical, so the
     keep-last tie among them cannot change values, and the final view must
     equal the single-copy batch table exactly."""
-    import shutil
-    import tempfile
-
     staged = stage_events_dir(spark, sf_dir)
     target = tempfile.mkdtemp(prefix="merge_upsert_target_")
-    ckpt = tempfile.mkdtemp(prefix="merge_upsert_ckpt_")
     try:
         sdf = events_stream(spark, staged, maxFilesPerTrigger=2)
         doubled = sdf.unionByName(sdf)  # at-least-once: every row twice
-        with state_sized(spark):
-            q = (
-                doubled.writeStream.foreachBatch(upsert_foreach_batch(target))
-                .trigger(availableNow=True)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            q.awaitTermination()
+        run_stream(doubled, foreach_batch=upsert_foreach_batch(target))
         final = read_upsert_target(spark, target, key="event_id")
         return (
             final.groupBy("event_type")
@@ -556,11 +594,10 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.count("*").alias("n_events"),
                 exact_value_sum().alias("sum_value"),
             )
-            # collect before the tmp dirs vanish: tiny (5 rows)
+            # collect before the target dir vanishes: tiny (5 rows)
             .localCheckpoint(eager=True)
         )
     finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(target, ignore_errors=True)
 
 
@@ -571,6 +608,12 @@ def tws_user_stats(spark: SparkSession, staged_dir: str, checkpoint: str) -> Dat
     a ValueState across micro-batches (maxFilesPerTrigger=1 forces one
     batch per staged file). Emits the running totals every batch; totals
     are monotone per user, so the final state is the per-user max row.
+
+    The emitted rows are captured as parquet next to the checkpoint
+    (``<checkpoint>_capture``, as in ``stateful_user_counts``; Spark
+    resumes a memory sink only in complete mode): a rerun on the same
+    checkpoint appends to that capture, and the max over it is the state
+    after every run.
 
     Exactness discipline: ``value`` is fixed to 6 decimals and scaled to
     int64 micro-units IN THE PLAN (decimal arithmetic) before it reaches
@@ -647,22 +690,19 @@ def tws_user_stats(spark: SparkSession, staged_dir: str, checkpoint: str) -> Dat
     )
     # TWS state lives in MULTIPLE column families, which only the RocksDB
     # provider supports (the HDFS-backed default raises
-    # STATE_STORE_MULTIPLE_COLUMN_FAMILIES); scoped to this query's run,
-    # previous provider restored after
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    rocksdb = (
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider"
-    )
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(provider_key, rocksdb)
-    try:
-        log = run_to_memory(updates, output_mode="append", checkpoint=checkpoint)
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
+    # STATE_STORE_MULTIPLE_COLUMN_FAMILIES); scoped to this query's run
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": "org.apache.spark."
+        "sql.execution.streaming.state.RocksDBStateStoreProvider"
+    }
+    capture_dir = checkpoint.rstrip("/") + "_capture"
+    with scoped_conf(spark, rocksdb):
+        run_stream(
+            updates,
+            foreach_batch=upsert_foreach_batch(capture_dir),
+            checkpoint=checkpoint,
+        )
+    log = spark.read.parquet(capture_dir)
     # totals are monotone per user -> the final state is the max row
     w_last = F.struct("n_events", "sum_value_micros", "max_ts_us")
     return (
@@ -678,16 +718,18 @@ def tws_user_stats(spark: SparkSession, staged_dir: str, checkpoint: str) -> Dat
 
 
 def stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered-query form of ``tws_user_stats``."""
-    import shutil
-    import tempfile
-
-    staged = stage_events_dir(spark, sf_dir)
-    checkpoint = tempfile.mkdtemp(prefix="tws_stats_ckpt_")
+    """Registered-query form of ``tws_user_stats``, on a checkpoint of its
+    own that is removed, with its capture, once the result is held."""
+    ckpt = _run_dir("tws_ckpt")
     try:
-        return tws_user_stats(spark, staged, checkpoint)
+        return (
+            tws_user_stats(spark, stage_events_dir(spark, sf_dir), ckpt)
+            # collect before the capture dir vanishes: one row per user
+            .localCheckpoint(eager=True)
+        )
     finally:
-        shutil.rmtree(checkpoint, ignore_errors=True)
+        for d in (ckpt, ckpt + "_capture"):
+            shutil.rmtree(d, ignore_errors=True)
 
 
 def stage_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
@@ -699,12 +741,8 @@ def stage_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
     only ever emits windows below the watermark; without the sentinel the
     tail sessions would stay in state and be dropped at query end).
     Idempotent per sf_dir."""
-    from ..sources.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, f"{tag}_events_sess_v2")
-    marker = os.path.join(out, "_staged_ok")
-    if not os.path.exists(marker):
+    def build(out: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         _assert_sentinel_free(ev)
         ev.repartition(4).write.mode("overwrite").parquet(out)
@@ -718,8 +756,8 @@ def stage_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:
             F.lit("{}").alias("props"),
         )
         sentinel.coalesce(1).write.mode("append").parquet(out)
-        open(marker, "w").close()
-    return out
+
+    return _stage(sf_dir, "events_sess", build)
 
 
 def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -763,15 +801,8 @@ def stage_events_with_attrib_sentinel(spark: SparkSession, sf_dir: str) -> str:
     type would never advance them) push the watermark past every real
     purchase so the tail's unmatched rows are evicted and emitted before
     the query ends. Idempotent per sf_dir."""
-    from ..sources.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, f"{tag}_events_attrib_v7")
-    marker = os.path.join(out, "_staged_ok")
-    if not os.path.exists(marker):
-        import glob as _glob
-        import time as _time
-
+    def build(out: str) -> None:
         ev = load_table(spark, sf_dir, "events")
         _assert_sentinel_free(ev)
         ev.repartitionByRange(4, "ts").sortWithinPartitions("ts").write.mode(
@@ -780,7 +811,7 @@ def stage_events_with_attrib_sentinel(spark: SparkSession, sf_dir: str) -> str:
         max_ts = ev.agg(F.max("ts").alias("m")).head()["m"]
 
         def _files():
-            return set(_glob.glob(os.path.join(out, "part-*.parquet")))
+            return set(glob.glob(os.path.join(out, "part-*.parquet")))
 
         data_files = _files()
         off_s = (2 * (ATTRIB_GAP_HOURS + 1) + 1) * 3600
@@ -807,7 +838,7 @@ def stage_events_with_attrib_sentinel(spark: SparkSession, sf_dir: str) -> str:
         # mtime = delivery order: data files by their min event time, then
         # sentinel-1, then sentinel-2 — all in the past (the source's
         # initial listing skips future-dated files)
-        t0 = _time.time()
+        t0 = time.time()
         ranked = sorted(
             data_files, key=lambda f: _file_min_ts_key(spark, f)
         )
@@ -817,32 +848,16 @@ def stage_events_with_attrib_sentinel(spark: SparkSession, sf_dir: str) -> str:
             os.utime(f, (t0 - 90, t0 - 90))
         for f in s2_files:
             os.utime(f, (t0 - 30, t0 - 30))
-        open(marker, "w").close()
-    return out
+
+    return _stage(sf_dir, "events_attrib", build)
 
 
 def outer_attribution_join_plan(purchases: DataFrame, clicks: DataFrame) -> DataFrame:
     """LEFT OUTER form of the interval join: every purchase row survives;
     unmatched purchases carry NULL click columns. Identical plan code for
     the batch oracle-equivalent and the stream-stream form."""
-    p = purchases.select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-    )
-    c = clicks.select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("c_user"),
-        F.col("ts").alias("c_ts"),
-    )
     return (
-        p.join(
-            c,
-            (F.col("p_user") == F.col("c_user"))
-            & (F.col("c_ts") <= F.col("p_ts"))
-            & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"interval {ATTRIB_GAP_HOURS} hours")),
-            "left_outer",
-        )
+        _interval_join(purchases, clicks, "left_outer")
         .select(
             "purchase_id",
             F.col("p_user").alias("user_id"),
@@ -894,16 +909,14 @@ def stream_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stage_documents_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     """Materialize documents as an n-file parquet directory for file-source
     streaming. Idempotent per sf_dir."""
-    from ..sources.tables import load_table
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, f"{tag}_documents_v1_{n_files}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        load_table(spark, sf_dir, "documents").repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(out)
-    return out
+    return _stage(
+        sf_dir,
+        f"documents_{n_files}",
+        lambda out: load_table(spark, sf_dir, "documents")
+        .repartition(n_files)
+        .write.mode("overwrite")
+        .parquet(out),
+    )
 
 
 def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -923,14 +936,8 @@ def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.corpus import cms_cells
 
     staged = stage_documents_dir(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    run_id = uuid.uuid4().hex[:10]
-    target = os.path.join(STAGE_ROOT, f"cms_cells_{run_id}")
+    sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
+    target = _run_dir("cms_cells")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -941,16 +948,7 @@ def stream_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(target)
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(STAGE_ROOT, "ckpt", f"cms_{run_id}"),
-        )
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(sdf, foreach_batch=write_batch)
     return (
         spark.read.parquet(target)
         .groupBy("d", "pos")
@@ -965,12 +963,8 @@ def stage_brand_purchases_dir(
     popularity op weighs — one row per lineitem with its brand and order
     date — as an n-file parquet dir for file-source streaming. Idempotent
     per sf_dir."""
-    from ..sources.tables import load_table
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, f"{tag}_brandpurch_v1_{n_files}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
+    def build(out: str) -> None:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey"
         )
@@ -989,7 +983,8 @@ def stage_brand_purchases_dir(
             .write.mode("overwrite")
             .parquet(out)
         )
-    return out
+
+    return _stage(sf_dir, f"brandpurch_{n_files}", build)
 
 
 def stream_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1018,14 +1013,8 @@ def stream_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ref_date = (
         spark.read.parquet(staged).agg(F.max("dt").alias("rd")).first()["rd"]
     )
-    schema = spark.read.parquet(staged).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    run_id = uuid.uuid4().hex[:10]
-    target = os.path.join(STAGE_ROOT, f"decpop_cells_{run_id}")
+    sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
+    target = _run_dir("decpop_cells")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         k = F.least(
@@ -1051,16 +1040,7 @@ def stream_decayed_popularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(target)
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(STAGE_ROOT, "ckpt", f"decpop_{run_id}"),
-        )
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(sdf, foreach_batch=write_batch)
     agg = (
         spark.read.parquet(target)
         .groupBy("brand")
@@ -1110,28 +1090,13 @@ def stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import tokens, word_ngrams
 
     staged = stage_documents_dir(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    run_id = uuid.uuid4().hex[:10]
-    target = os.path.join(STAGE_ROOT, f"hll_regs_{run_id}")
+    sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
+    target = _run_dir("hll_regs")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         hll_regs(batch_df).write.mode("append").parquet(target)
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(STAGE_ROOT, "ckpt", f"hll_{run_id}"),
-        )
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(sdf, foreach_batch=write_batch)
     regs = (
         spark.read.parquet(target).groupBy("bucket").agg(F.max("r").alias("r"))
     )
@@ -1163,20 +1128,57 @@ def stream_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stage_orders_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
     """Materialize the orders columns the IVM view aggregates as an
     n-file parquet dir for file-source streaming. Idempotent per sf_dir."""
-    from ..sources.tables import load_table
+    return _stage(
+        sf_dir,
+        f"orders_{n_files}",
+        lambda out: load_table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice")
+        .repartition(n_files)
+        .write.mode("overwrite")
+        .parquet(out),
+    )
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    out = os.path.join(STAGE_ROOT, f"{tag}_orders_v1_{n_files}")
-    marker = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(marker):
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderdate", "o_orderpriority", "o_totalprice")
-            .repartition(n_files)
-            .write.mode("overwrite")
-            .parquet(out)
+
+def additive_view_batch(
+    view_root: str,
+    delta: Callable[[DataFrame], DataFrame],
+    keys: list[str],
+    sums: dict[str, str],
+) -> Callable[[DataFrame, int], None]:
+    """foreachBatch writer for an additively-merged versioned view:
+    ``v{b} = v{b-1} ∪ delta(batch b)``, re-aggregated by ``keys`` with each
+    ``sums`` column summed and cast to its type. Each batch costs
+    O(|delta| + |view|), never a rescan of history; a replayed batch
+    rewrites the same bytes (v{b} is a deterministic function of v{b-1}
+    and batch b, written in mode overwrite), so replays never double-count
+    as long as the sums are commutative monoids (longs, decimals)."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        merged = delta(batch_df)
+        prev = os.path.join(view_root, f"v{batch_id - 1}")
+        if batch_id > 0 and os.path.exists(os.path.join(prev, "_SUCCESS")):
+            merged = (
+                batch_df.sparkSession.read.parquet(prev)
+                .unionByName(merged)
+                .groupBy(*keys)
+                .agg(*[F.sum(c).cast(t).alias(c) for c, t in sums.items()])
+            )
+        merged.write.mode("overwrite").parquet(
+            os.path.join(view_root, f"v{batch_id}")
         )
-    return out
+
+    return write_batch
+
+
+def latest_view(spark: SparkSession, view_root: str) -> DataFrame:
+    """The newest complete version (``v*/_SUCCESS``) of an additive view."""
+    versions = [
+        int(d[1:])
+        for d in os.listdir(view_root)
+        if d.startswith("v")
+        and os.path.exists(os.path.join(view_root, d, "_SUCCESS"))
+    ]
+    return spark.read.parquet(os.path.join(view_root, f"v{max(versions)}"))
 
 
 def stream_ivm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1204,14 +1206,8 @@ def stream_ivm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     |groups| rows; the view log holds #batches bounded snapshots and a
     reader always hits exactly one version directory."""
     staged = stage_orders_dir(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    run_id = uuid.uuid4().hex[:10]
-    view_root = os.path.join(STAGE_ROOT, f"ivm_view_{run_id}")
+    sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
+    view_root = _run_dir("ivm_view")
 
     def part_agg(df: DataFrame) -> DataFrame:
         return (
@@ -1231,43 +1227,16 @@ def stream_ivm_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        delta = part_agg(batch_df)
-        prev = os.path.join(view_root, f"v{batch_id - 1}")
-        if batch_id > 0 and os.path.exists(os.path.join(prev, "_SUCCESS")):
-            merged = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(delta)
-                .groupBy("month", "priority")
-                .agg(
-                    F.sum("n_part").cast("long").alias("n_part"),
-                    F.sum("rev_part").cast("decimal(18,2)").alias("rev_part"),
-                )
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(
-            os.path.join(view_root, f"v{batch_id}")
-        )
-
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(STAGE_ROOT, "ckpt", f"ivm_{run_id}"),
-        )
-        .start()
+    run_stream(
+        sdf,
+        foreach_batch=additive_view_batch(
+            view_root,
+            part_agg,
+            ["month", "priority"],
+            {"n_part": "long", "rev_part": "decimal(18,2)"},
+        ),
     )
-    q.awaitTermination()
-    versions = [
-        int(d[1:])
-        for d in os.listdir(view_root)
-        if d.startswith("v")
-        and os.path.exists(os.path.join(view_root, d, "_SUCCESS"))
-    ]
-    latest = os.path.join(view_root, f"v{max(versions)}")
-    return spark.read.parquet(latest).select(
+    return latest_view(spark, view_root).select(
         "month",
         "priority",
         F.col("n_part").alias("n_orders"),
@@ -1303,14 +1272,8 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.analytics import QSK_CAP
 
     staged = stage_events_dir(spark, sf_dir)
-    schema = spark.read.parquet(staged).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
-    run_id = uuid.uuid4().hex[:10]
-    target = os.path.join(STAGE_ROOT, f"qsk_log_{run_id}")
+    sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
+    target = _run_dir("qsk_log")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Window
@@ -1343,16 +1306,7 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(target)
         )
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(STAGE_ROOT, "ckpt", f"qsk_{run_id}"),
-        )
-        .start()
-    )
-    q.awaitTermination()
+    run_stream(sdf, foreach_batch=write_batch)
 
     from pyspark.sql import Window
 
@@ -1491,57 +1445,26 @@ def _frozen_edge_stream_hist(
             .agg(F.count("*").cast("long").alias("c"))
         )
 
-    run_id = uuid.uuid4().hex[:10]
-    view_root = os.path.join(STAGE_ROOT, f"{tag}_view_{run_id}")
+    view_root = _run_dir(f"{tag}_view")
     ref_hist = hist(base).select(
         "event_type", "bin", F.col("c").alias("c_b")
     )
     ref_hist.persist().count()  # freeze the reference once (train-time)
 
-    schema = spark.read.parquet(staged).schema
-    sdf = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged)
-    )
+    sdf = events_stream(spark, staged, maxFilesPerTrigger=1)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        delta = hist(
+    def delta(batch_df: DataFrame) -> DataFrame:
+        return hist(
             batch_df.where(F.dayofmonth("ts") > PSI_SPLIT_DAY)
         ).select("event_type", "bin", F.col("c").alias("c_c"))
-        prev = os.path.join(view_root, f"v{batch_id - 1}")
-        if batch_id > 0 and os.path.exists(os.path.join(prev, "_SUCCESS")):
-            merged = (
-                batch_df.sparkSession.read.parquet(prev)
-                .unionByName(delta)
-                .groupBy("event_type", "bin")
-                .agg(F.sum("c_c").cast("long").alias("c_c"))
-            )
-        else:
-            merged = delta
-        merged.write.mode("overwrite").parquet(
-            os.path.join(view_root, f"v{batch_id}")
-        )
 
-    q = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation",
-            os.path.join(STAGE_ROOT, "ckpt", f"{tag}_{run_id}"),
-        )
-        .start()
+    run_stream(
+        sdf,
+        foreach_batch=additive_view_batch(
+            view_root, delta, ["event_type", "bin"], {"c_c": "long"}
+        ),
     )
-    q.awaitTermination()
-    versions = [
-        int(d[1:])
-        for d in os.listdir(view_root)
-        if d.startswith("v")
-        and os.path.exists(os.path.join(view_root, d, "_SUCCESS"))
-    ]
-    cur_hist = spark.read.parquet(
-        os.path.join(view_root, f"v{max(versions)}")
-    )
+    cur_hist = latest_view(spark, view_root)
 
     # the persists existed to serve the per-batch foreachBatch joins; the
     # stream is drained, so release them before returning (the ml_minhash

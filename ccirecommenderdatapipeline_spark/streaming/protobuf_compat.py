@@ -18,6 +18,7 @@ a no-op returning "native".
 
 from __future__ import annotations
 
+import importlib.util
 import os
 import sys
 import zipfile
@@ -68,19 +69,18 @@ def ensure_protobuf(spark) -> str:
     otherwise wire the vendored shim into this driver and the session's
     Python workers and return "shim"."""
     try:
-        import google.protobuf as _gpb
         from google.protobuf import descriptor  # noqa: F401
-
-        # a shim already importable in THIS process (e.g. a test put the
-        # vendor dir on sys.path) is NOT a native runtime — workers still
-        # need the zip + env delivery below, so only short-circuit when
-        # the import resolved outside the vendor tree
-        if not getattr(_gpb, "__file__", "").startswith(_VENDOR):
-            return "native"
     except ImportError:
         if _VENDOR not in sys.path:
             sys.path.insert(0, _VENDOR)
         from google.protobuf import descriptor  # noqa: F401  (validates shim)
+    else:
+        # a shim already importable in THIS process (a test, or another
+        # checkout's vendor tree, on sys.path) is NOT a native runtime —
+        # workers still need the zip + env delivery below. The shim is
+        # recognized by its own marker module, not by where it lives.
+        if importlib.util.find_spec("google.protobuf._shim_runtime") is None:
+            return "native"
 
     sc = spark.sparkContext
     app_id = sc.applicationId

@@ -147,7 +147,8 @@ def test_freshness_gate_refresh_advances_only_green(tmp_path, monkeypatch):
 def test_canonical_hash_normalizes_session_variance():
     """The literal hash must be stable across SparkSessions (exprIds
     restart and shift with registry build order; staging paths are
-    mkdtemp-random) while remaining sensitive to literal-only changes —
+    mkdtemp-random) and across core counts (partition counts taken from
+    the core count) while remaining sensitive to literal-only changes —
     the r11 nano-nat class the structural counts cannot see."""
     from audit_plans import canonical_hash
 
@@ -172,6 +173,31 @@ def test_canonical_hash_normalizes_session_variance():
     assert canonical_hash(a) == canonical_hash(b)
     assert canonical_hash(a) != canonical_hash(c)
     assert canonical_hash(d1) != canonical_hash(d2)
+
+    # fan_out's repartition(defaultParallelism, key) and spark.range's
+    # default splits carry the host's core count: the same plan at 4 and
+    # at 32 cores hashes equal...
+    f4 = (
+        "Join Cross\n"
+        ":- Project [(price#3 + 7) AS k#7]\n"
+        ":  +- RepartitionByExpression [symbol#1], 4\n"
+        ":     +- Relation [symbol#1,price#3] parquet\n"
+        "+- Range (0, 10, step=1, splits=Some(4))"
+    )
+    f32 = f4.replace("], 4", "], 32").replace("Some(4)", "Some(32)")
+    assert canonical_hash(f4, 4) == canonical_hash(f32, 32)
+    # ...while any other literal change still moves the hash
+    assert canonical_hash(f4, 4) != canonical_hash(f4.replace("+ 7", "+ 8"), 4)
+    # a count that is not the session's core count stays a literal
+    assert canonical_hash(f4, 32) != canonical_hash(f32, 32)
+    m8 = "RepartitionByExpression [media_id#2], 8"
+    assert canonical_hash(m8, 4) == canonical_hash(m8, 32)
+    assert canonical_hash(m8, 4) != canonical_hash(m8.replace(", 8", ", 16"), 4)
+    # known limit: the plan text cannot tell a hard-coded count from a
+    # core count, so on an 8-core host the fixed 8 reads as <parallelism>
+    # and hashes like a fan_out count at any other host's core count
+    assert canonical_hash(m8, 8) == canonical_hash(m8.replace(", 8", ", 32"), 32)
+    assert canonical_hash(m8, 8) != canonical_hash(m8, 4)
 
 
 def test_freshness_gate_trips_on_literal_only_drift():

@@ -8,9 +8,14 @@ SparkSession needed."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-VENDOR = "/root/repo/vendor/protobuf_shim"
+VENDOR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "vendor",
+    "protobuf_shim",
+)
 
 
 def _sm():
@@ -166,8 +171,6 @@ def test_worker_zip_merges_filesystem_google_portions(tmp_path):
 def test_ensure_protobuf_does_not_mutate_process_env(spark):
     """The PYTHONPATH delivery is scoped to sc.environment (the UDF env
     channel); os.environ must stay untouched (ADVICE r11 item 3)."""
-    import os
-
     from ccirecommenderdatapipeline_spark.streaming.protobuf_compat import (
         ensure_protobuf,
     )

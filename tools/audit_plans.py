@@ -524,7 +524,7 @@ def _has_unpartitioned_window(plan_txt: str) -> bool:
     return False
 
 
-def canonical_hash(plan_txt: str) -> str:
+def canonical_hash(plan_txt: str, parallelism: int | None = None) -> str:
     """Literal-sensitive plan hash (VERDICT r12 item 2) — md5 of the
     ANALYZED-plan text with the per-session variance sources normalized
     out:
@@ -552,7 +552,19 @@ def canonical_hash(plan_txt: str) -> str:
       wrappers' per-run temp-view names) dropped: 10+ hex chars after
       an underscore never occur in hand-written column names here, and
       literal hex CONSTANTS in expressions render as function args, not
-      ``_hex`` identifier tails.
+      ``_hex`` identifier tails;
+    - the host's core count where it enters a plan as a partition count:
+      ``sources.tables.fan_out``'s keyed ``repartition(defaultParallelism,
+      key)`` and ``spark.range``'s default ``splits``. A keyed
+      ``RepartitionByExpression`` count or a ``Range`` split count equal
+      to ``parallelism`` (the session's defaultParallelism, passed by
+      ``fingerprint``) reads ``<parallelism>``, so one plan hashes equal
+      at 4 and at 32 cores. Every other count keeps its literal identity
+      (multimodal's fixed ``repartition(8, "media_id")`` still moves the
+      hash if it changes). The plan text cannot tell a literal from a
+      core count, so on a host whose core count equals a hard-coded count
+      (8 cores, for those multimodal queries) that count is normalized
+      too.
 
     The ANALYZED plan (not optimized/executed) is the hash source: it
     still carries every user-written literal, hint, and shape — a
@@ -573,6 +585,13 @@ def canonical_hash(plan_txt: str) -> str:
     import re
 
     txt = re.sub(r"\[plan_id=\d+\]", "[plan_id=<n>]", plan_txt)
+    if parallelism is not None:
+        txt = re.sub(
+            rf"(RepartitionByExpression \[[^\n]*\], |Range \([^\n]*splits=Some\()"
+            rf"{parallelism}\b",
+            r"\1<parallelism>",
+            txt,
+        )
     txt = re.sub(r"\blambda ([A-Za-z]+)_\d+#", r"lambda \1_<n>#", txt)
     txt = re.sub(r"@[0-9a-f]{7,}\b", "@<addr>", txt)
     txt = re.sub(r"_[0-9a-f]{10,16}\b", "_<uid>", txt)
@@ -655,7 +674,9 @@ def fingerprint(
         # item 2; migration path: tools/freshness_gate.py --adopt).
         # Hashed from the ANALYZED plan, not the executed one — see
         # canonical_hash's docstring for why.
-        ent["__lit_md5__"] = canonical_hash(analyzed)
+        ent["__lit_md5__"] = canonical_hash(
+            analyzed, spark.sparkContext.defaultParallelism
+        )
         fp[name] = ent
     # Physical plans are SF-DEPENDENT by design (static size estimates
     # cross autoBroadcastJoinThreshold between SFs — e.g. tpch_q7 is
