@@ -43,9 +43,9 @@ E3_TABLES = {"sell_decisions": "sell_decisions", "order_reconciliation": "order_
 def run_daily_batch(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, int]:
     """Run E1+E2+E3 end to end; returns row counts per written table.
 
-    Writes are idempotent overwrites partitioned where the table has a
-    natural key (prices/cci by nothing here — at scale, bucket by symbol;
-    see tests/test_bucketing.py for the layout)."""
+    Every table is written as an unpartitioned parquet overwrite, so a
+    rerun replaces it (at scale, bucket prices/cci by symbol; see
+    tests/test_bucketing.py for the layout)."""
     counts: dict[str, int] = {}
     for stage in (E1_TABLES, E2_TABLES, E3_TABLES):
         for table, query_name in stage.items():

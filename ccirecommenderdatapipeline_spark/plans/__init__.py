@@ -16,7 +16,6 @@ from . import multimodal  # noqa: E402,F401
 from . import storage  # noqa: E402,F401
 from . import mllib  # noqa: E402,F401
 from . import broker  # noqa: E402,F401
-from . import northstar  # noqa: E402,F401
 from . import quality  # noqa: E402,F401
 from . import analytics  # noqa: E402,F401
 from . import sampling  # noqa: E402,F401

@@ -123,7 +123,9 @@ def q_stream_execution_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each micro-batch is APPENDED to a parquet staging table by
     the executors (the exactly-once sink discipline — S8); the returned
-    DataFrame is a scan of that table. No row ever crosses the driver —
+    DataFrame is that table held by ``localCheckpoint``, after which the
+    staging table and the checkpoint are removed (``run_held``). No row
+    ever crosses the driver —
     drain detection reads only the run's numInputRows progress metric: a
     run that delivers fewer rows than a full page means the reader hit the
     end of the feed (the standard REST-pagination short-page signal,
@@ -133,32 +135,33 @@ def q_stream_execution_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a fixed ~1.4 s cost, so run count — not row count — dominates at
     fixture scale; at production scale the page size is the API's, and
     the same short-page predicate terminates the drain loop."""
-    import tempfile
-
     from ..sources.execution_feed import register as register_feed
-    from ..streaming.jobs import run_stream
+    from ..streaming.jobs import run_held, run_stream
 
     register_feed(spark)
-    checkpoint = tempfile.mkdtemp(prefix="exec_feed_ckpt_")
-    staging = tempfile.mkdtemp(prefix="exec_feed_stage_")
     page = 373
-
-    def stage(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(staging)
-
     feed = (
         spark.readStream.format("execution_feed")
         .option("total", TOTAL_EXECS)
         .option("batch", page)
         .load()
     )
-    while True:
-        q = run_stream(feed, foreach_batch=stage, checkpoint=checkpoint)
-        if sum(p["numInputRows"] for p in q.recentProgress) < page:
-            break
-    return spark.read.schema(
-        "exec_id BIGINT, order_no BIGINT, exec_qty BIGINT, exec_price DOUBLE"
-    ).parquet(staging)
+
+    def drain(checkpoint: str) -> DataFrame:
+        staging = checkpoint + "_capture"
+
+        def stage(batch_df: DataFrame, batch_id: int) -> None:
+            batch_df.write.mode("append").parquet(staging)
+
+        while True:
+            q = run_stream(feed, foreach_batch=stage, checkpoint=checkpoint)
+            if sum(p["numInputRows"] for p in q.recentProgress) < page:
+                break
+        return spark.read.schema(
+            "exec_id BIGINT, order_no BIGINT, exec_qty BIGINT, exec_price DOUBLE"
+        ).parquet(staging)
+
+    return run_held("exec_feed_ckpt", drain)
 
 
 @query(
@@ -193,10 +196,10 @@ def q_order_ledger_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-exact against the oracle's recomputation of the same orders —
     proving the write path (partitioned write + commit protocol + codec)
     loses and invents nothing. Doubles survive the JSON hop exactly
-    (shortest-repr round-trip)."""
-    import tempfile
-
+    (shortest-repr round-trip). The read-back is held by
+    ``localCheckpoint`` and the ledger dir removed (``run_held``)."""
     from ..sources.ledger import read_ledger, register as register_sink
+    from ..streaming.jobs import run_held
 
     register(spark)
     register_sink(spark)
@@ -215,11 +218,14 @@ def q_order_ledger_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("hold_qty").alias("order_qty"),
         F.col("current_price").alias("limit_price"),
     )
-    path = tempfile.mkdtemp(prefix="order_ledger_")
-    orders.write.format("order_ledger").option("path", path).mode("append").save()
-    return read_ledger(
-        spark,
-        path,
-        "account_id INT, symbol STRING, side STRING, order_qty BIGINT, "
-        "limit_price DOUBLE",
-    )
+
+    def roundtrip(path: str) -> DataFrame:
+        orders.write.format("order_ledger").option("path", path).mode("append").save()
+        return read_ledger(
+            spark,
+            path,
+            "account_id INT, symbol STRING, side STRING, order_qty BIGINT, "
+            "limit_price DOUBLE",
+        )
+
+    return run_held("order_ledger", roundtrip)

@@ -16,6 +16,9 @@ frontier against the (small, broadcast) parent map.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.storagelevel import StorageLevel
+
+from ..operators.planmemo import shared_view
 from ..sources.tables import load_table
 from .registry import query
 
@@ -212,6 +215,19 @@ def q_pagerank_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- Shared basket-pair statistics for the brand co-occurrence family --------
 
 
+@shared_view(persist=StorageLevel.MEMORY_AND_DISK_DESER)
+def _brand_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(brand_a < brand_b, pair_cnt) basket co-occurrence counts, the
+    ``pr`` of ``_pair_stats``."""
+    from .recommender import _basket_pairs, order_baskets_view
+
+    return (
+        _basket_pairs(order_baskets_view(spark, sf_dir))
+        .groupBy(F.col("pr.u").alias("brand_a"), F.col("pr.v").alias("brand_b"))
+        .agg(F.count("*").cast("long").alias("pair_cnt"))
+    )
+
+
 def _pair_stats(spark: SparkSession, sf_dir: str):
     """(pr, bc, n) for the brand co-occurrence graph family — pr =
     (brand_a < brand_b, pair_cnt) basket co-occurrence counts, bc =
@@ -233,21 +249,10 @@ def _pair_stats(spark: SparkSession, sf_dir: str):
 
     100-TB shape unchanged: one corpus-scale shuffle (the basket
     groupBy), vocabulary-bounded everything after."""
-    from ..operators.planmemo import plan_memo
-    from .recommender import _basket_pairs, order_baskets_view
+    from .recommender import order_baskets_view
 
     baskets = order_baskets_view(spark, sf_dir)
-
-    def build_pr() -> DataFrame:
-        return (
-            _basket_pairs(baskets)
-            .groupBy(
-                F.col("pr.u").alias("brand_a"), F.col("pr.v").alias("brand_b")
-            )
-            .agg(F.count("*").cast("long").alias("pair_cnt"))
-        )
-
-    pr = plan_memo(spark, ("brand_pair_counts", sf_dir), build_pr).persist()
+    pr = _brand_pair_counts(spark, sf_dir)
     bc = (
         baskets.select(F.explode("bs").alias("brand"))
         .groupBy("brand")

@@ -33,7 +33,9 @@ cosmetic ROUND.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.storagelevel import StorageLevel
 
+from ..operators.planmemo import shared_view
 from ..operators.windows import bounded_window
 from pyspark.sql import functions as F
 
@@ -47,6 +49,7 @@ MIN_SUPPORT = 0.025
 TOP_NEIGHBORS = 3
 
 
+@shared_view(persist=StorageLevel.MEMORY_AND_DISK_DESER)
 def cb_incidence_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared distinct (ck, brand) customer-brand incidence, persisted
     lazily (r16, the ``agged_view`` treatment): six registered queries
@@ -61,28 +64,24 @@ def cb_incidence_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     100-TB shape unchanged: the distinct is the one corpus-scale shuffle
     (key ck, fan-out bounded by the brand vocabulary); part broadcasts."""
-    from ..operators.planmemo import plan_memo
-
-    def build() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey"
+    )
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        .select(
+            F.col("o_custkey").alias("ck"), F.col("p_brand").alias("brand")
         )
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey"
-        )
-        p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-        return (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(p), li.l_partkey == p.p_partkey)
-            .select(
-                F.col("o_custkey").alias("ck"), F.col("p_brand").alias("brand")
-            )
-            .distinct()
-        )
-
-    return plan_memo(spark, ("cb_incidence", sf_dir), build).persist()
+        .distinct()
+    )
 
 
+@shared_view(persist=StorageLevel.MEMORY_AND_DISK_DESER)
 def brand_sim_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared item-item cosine model (brand_a, brand_b, both_cnt, c_a,
     c_b, cosine), persisted lazily (r16): the |V|^2-bounded similarity
@@ -95,43 +94,39 @@ def brand_sim_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both_cnt, c_a, c_b) alongside the pre-rounded cosine so
     ``item_item_cosine`` can re-derive its unrounded ranking key
     bit-identically."""
-    from ..operators.planmemo import plan_memo
-
-    def build() -> DataFrame:
-        cb = cb_incidence_view(spark, sf_dir)
-        bc = cb.groupBy("brand").agg(F.count("*").cast("long").alias("c"))
-        b = cb.select("ck", F.col("brand").alias("brand_b"))
-        pairs = (
-            cb.select("ck", F.col("brand").alias("brand_a"))
-            .join(b, "ck")
-            .where(F.col("brand_a") != F.col("brand_b"))
-            .groupBy("brand_a", "brand_b")
-            .agg(F.count("*").cast("long").alias("both_cnt"))
+    cb = cb_incidence_view(spark, sf_dir)
+    bc = cb.groupBy("brand").agg(F.count("*").cast("long").alias("c"))
+    b = cb.select("ck", F.col("brand").alias("brand_b"))
+    pairs = (
+        cb.select("ck", F.col("brand").alias("brand_a"))
+        .join(b, "ck")
+        .where(F.col("brand_a") != F.col("brand_b"))
+        .groupBy("brand_a", "brand_b")
+        .agg(F.count("*").cast("long").alias("both_cnt"))
+    )
+    ca = bc.select(F.col("brand").alias("brand_a"), F.col("c").alias("c_a"))
+    cb2 = bc.select(
+        F.col("brand").alias("brand_b"), F.col("c").alias("c_b")
+    )
+    return (
+        pairs.join(F.broadcast(ca), "brand_a")
+        .join(F.broadcast(cb2), "brand_b")
+        .select(
+            "brand_a",
+            "brand_b",
+            "both_cnt",
+            "c_a",
+            "c_b",
+            F.round(
+                F.col("both_cnt")
+                / F.sqrt(F.col("c_a").cast("double") * F.col("c_b")),
+                8,
+            ).alias("cosine"),
         )
-        ca = bc.select(F.col("brand").alias("brand_a"), F.col("c").alias("c_a"))
-        cb2 = bc.select(
-            F.col("brand").alias("brand_b"), F.col("c").alias("c_b")
-        )
-        return (
-            pairs.join(F.broadcast(ca), "brand_a")
-            .join(F.broadcast(cb2), "brand_b")
-            .select(
-                "brand_a",
-                "brand_b",
-                "both_cnt",
-                "c_a",
-                "c_b",
-                F.round(
-                    F.col("both_cnt")
-                    / F.sqrt(F.col("c_a").cast("double") * F.col("c_b")),
-                    8,
-                ).alias("cosine"),
-            )
-        )
-
-    return plan_memo(spark, ("brand_sim", sf_dir), build).persist()
+    )
 
 
+@shared_view(persist=StorageLevel.MEMORY_AND_DISK_DESER)
 def order_baskets_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared (ok, sorted distinct brand array) baskets, memoized +
     persisted (r16): ``market_basket_pairs`` and ``apriori_triples``
@@ -144,22 +139,18 @@ def order_baskets_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     part is projected to its 2-column (partkey, brand) dim before the
     join; at testdata scale that side broadcasts, and at warehouse scale
     the projection keeps the shuffle payload to key+brand."""
-    from ..operators.planmemo import plan_memo
-
-    def build() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
-        )
-        p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-        return (
-            li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-            .groupBy(F.col("l_orderkey").alias("ok"))
-            .agg(F.array_sort(F.collect_set("p_brand")).alias("bs"))
-        )
-
-    return plan_memo(spark, ("order_baskets", sf_dir), build).persist()
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    return (
+        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        .groupBy(F.col("l_orderkey").alias("ok"))
+        .agg(F.array_sort(F.collect_set("p_brand")).alias("bs"))
+    )
 
 
+@shared_view(persist=StorageLevel.MEMORY_AND_DISK_DESER)
 def brand_transitions_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared (brand_from, brand_to, cnt) consecutive-order transition
     counts, memoized + persisted (r16; guide §2.4 share-one-build):
@@ -170,42 +161,37 @@ def brand_transitions_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     probabilities vs the power-iteration fold). The persisted result is
     <= |V|^2 = 625 rows; one basket shuffle + one window per session
     instead of per query."""
-    from ..operators.planmemo import plan_memo
-
-    def build() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate"
+    )
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    ob = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        .select(
+            F.col("o_custkey").alias("ck"),
+            F.col("o_orderkey").alias("ok"),
+            F.col("o_orderdate").alias("dt"),
+            F.col("p_brand").alias("brand"),
         )
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderdate"
-        )
-        p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-        ob = (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(p), li.l_partkey == p.p_partkey)
-            .select(
-                F.col("o_custkey").alias("ck"),
-                F.col("o_orderkey").alias("ok"),
-                F.col("o_orderdate").alias("dt"),
-                F.col("p_brand").alias("brand"),
-            )
-        )
-        baskets = ob.groupBy("ck", "ok", "dt").agg(
-            F.collect_set("brand").alias("bs")
-        )
-        w = Window.partitionBy("ck").orderBy("dt", "ok")
-        lagged = (
-            baskets.withColumn("prev", F.lag("bs").over(w))
-            .where(F.col("prev").isNotNull())
-        )
-        return (
-            lagged.select(F.explode("prev").alias("brand_from"), "bs")
-            .select("brand_from", F.explode("bs").alias("brand_to"))
-            .groupBy("brand_from", "brand_to")
-            .agg(F.count("*").cast("long").alias("cnt"))
-        )
-
-    return plan_memo(spark, ("brand_transitions", sf_dir), build).persist()
+    )
+    baskets = ob.groupBy("ck", "ok", "dt").agg(
+        F.collect_set("brand").alias("bs")
+    )
+    w = Window.partitionBy("ck").orderBy("dt", "ok")
+    lagged = (
+        baskets.withColumn("prev", F.lag("bs").over(w))
+        .where(F.col("prev").isNotNull())
+    )
+    return (
+        lagged.select(F.explode("prev").alias("brand_from"), "bs")
+        .select("brand_from", F.explode("bs").alias("brand_to"))
+        .groupBy("brand_from", "brand_to")
+        .agg(F.count("*").cast("long").alias("cnt"))
+    )
 
 
 def _basket_pairs(baskets: DataFrame) -> DataFrame:
@@ -743,7 +729,8 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``item_item_cosine`` plan on the train slice; relevance sets shuffle
     once on ck; every per-customer structure (candidates, hits) is
     <= |V| rows. The cutoff filter is a scan-level pushdown."""
-    ranked, new_rel = _temporal_ranked(spark, sf_dir)
+    ranked = _temporal_ranked(spark, sf_dir)
+    new_rel = _temporal_new_rel(spark, sf_dir)
     hits = ranked.join(
         new_rel.withColumn("rel_hit", F.lit(1)), ["ck", "brand"], "left"
     ).select("ck", "rnk", F.coalesce(F.col("rel_hit"), F.lit(0)).alias("rel"))
@@ -765,130 +752,111 @@ def q_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@shared_view()
 def _temporal_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lazy (ck, brand, dt) incidence plan for the temporal-split rig —
     memoized (r16) so the two consumers and both slices below share one
     built tree; NOT persisted (each slice scans with its own date
     pushdown)."""
-    from ..operators.planmemo import plan_memo
-
-    def build() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey"
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey"
+    )
+    o = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderdate"
+    )
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
+    return (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(p), li.l_partkey == p.p_partkey)
+        .select(
+            F.col("o_custkey").alias("ck"),
+            F.col("p_brand").alias("brand"),
+            F.col("o_orderdate").cast("date").alias("dt"),
         )
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderdate"
-        )
-        p = load_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-        return (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(p), li.l_partkey == p.p_partkey)
-            .select(
-                F.col("o_custkey").alias("ck"),
-                F.col("p_brand").alias("brand"),
-                F.col("o_orderdate").cast("date").alias("dt"),
-            )
-        )
-
-    return plan_memo(spark, ("temporal_base", sf_dir), build)
+    )
 
 
+@shared_view(persist=StorageLevel.MEMORY_AND_DISK_DESER)
 def _temporal_tr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-cutoff (ck, brand) train incidence, memoized + persisted on
     every return (r16): referenced four times inside each consumer's
     plan and by both eval queries."""
-    from ..operators.planmemo import plan_memo
-
-    def build() -> DataFrame:
-        cutoff = F.lit(NDCG_CUTOFF).cast("date")
-        return (
-            _temporal_base(spark, sf_dir)
-            .where(F.col("dt") < cutoff)
-            .select("ck", "brand")
-            .distinct()
-        )
-
-    return plan_memo(spark, ("temporal_tr", sf_dir), build).persist()
+    cutoff = F.lit(NDCG_CUTOFF).cast("date")
+    return (
+        _temporal_base(spark, sf_dir)
+        .where(F.col("dt") < cutoff)
+        .select("ck", "brand")
+        .distinct()
+    )
 
 
+@shared_view(persist=StorageLevel.MEMORY_AND_DISK_DESER)
 def _temporal_new_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-time post-cutoff relevance set (ck, brand), memoized +
     persisted on every return (r16)."""
-    from ..operators.planmemo import plan_memo
-
-    def build() -> DataFrame:
-        cutoff = F.lit(NDCG_CUTOFF).cast("date")
-        te = (
-            _temporal_base(spark, sf_dir)
-            .where(F.col("dt") >= cutoff)
-            .select("ck", "brand")
-            .distinct()
-        )
-        return te.join(_temporal_tr(spark, sf_dir), ["ck", "brand"], "left_anti")
-
-    return plan_memo(spark, ("temporal_new_rel", sf_dir), build).persist()
+    cutoff = F.lit(NDCG_CUTOFF).cast("date")
+    te = (
+        _temporal_base(spark, sf_dir)
+        .where(F.col("dt") >= cutoff)
+        .select("ck", "brand")
+        .distinct()
+    )
+    return te.join(_temporal_tr(spark, sf_dir), ["ck", "brand"], "left_anti")
 
 
-def _temporal_ranked(spark: SparkSession, sf_dir: str):
+@shared_view(persist=StorageLevel.MEMORY_AND_DISK_DESER)
+def _temporal_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared temporal-split recommender eval rig (``ndcg_eval`` /
     ``map_mrr_eval``): cosine model trained strictly before {NDCG_CUTOFF},
-    top-{NDCG_K} unbought candidates ranked per sampled customer. Returns
-    ``(ranked, new_rel)`` — the rank list (ck, brand, rnk<= {NDCG_K}) and
-    the first-time post-cutoff relevance set (ck, brand).
+    top-{NDCG_K} unbought candidates ranked per sampled customer: the rank
+    list (ck, brand, rnk<= {NDCG_K}). The first-time post-cutoff relevance
+    set it is scored against is ``_temporal_new_rel``.
 
     r16: the rig's three reused tables (tr, new_rel, the rank list) are
     memoized + persisted shared views, so the train-slice similarity
     model and the candidate ranking build ONCE per session instead of
     once per eval query (guide §2.4/§5; the ``brand_sim_view``
     treatment on the date-filtered slice)."""
-    from ..operators.planmemo import plan_memo
-
-    def build_ranked() -> DataFrame:
-        tr = _temporal_tr(spark, sf_dir)
-        bc = tr.groupBy("brand").agg(F.count("*").cast("long").alias("c"))
-        b2 = tr.select("ck", F.col("brand").alias("brand_b"))
-        pairs = (
-            tr.select("ck", F.col("brand").alias("brand_a"))
-            .join(b2, "ck")
-            .where(F.col("brand_a") != F.col("brand_b"))
-            .groupBy("brand_a", "brand_b")
-            .agg(F.count("*").cast("long").alias("both_cnt"))
+    tr = _temporal_tr(spark, sf_dir)
+    bc = tr.groupBy("brand").agg(F.count("*").cast("long").alias("c"))
+    b2 = tr.select("ck", F.col("brand").alias("brand_b"))
+    pairs = (
+        tr.select("ck", F.col("brand").alias("brand_a"))
+        .join(b2, "ck")
+        .where(F.col("brand_a") != F.col("brand_b"))
+        .groupBy("brand_a", "brand_b")
+        .agg(F.count("*").cast("long").alias("both_cnt"))
+    )
+    ca = bc.select(F.col("brand").alias("brand_a"), F.col("c").alias("c_a"))
+    cb2 = bc.select(F.col("brand").alias("brand_b"), F.col("c").alias("c_b"))
+    sim = (
+        pairs.join(F.broadcast(ca), "brand_a")
+        .join(F.broadcast(cb2), "brand_b")
+        .select(
+            "brand_a",
+            "brand_b",
+            F.round(
+                F.col("both_cnt")
+                / F.sqrt(F.col("c_a").cast("double") * F.col("c_b")),
+                8,
+            ).alias("cosine"),
         )
-        ca = bc.select(F.col("brand").alias("brand_a"), F.col("c").alias("c_a"))
-        cb2 = bc.select(F.col("brand").alias("brand_b"), F.col("c").alias("c_b"))
-        sim = (
-            pairs.join(F.broadcast(ca), "brand_a")
-            .join(F.broadcast(cb2), "brand_b")
-            .select(
-                "brand_a",
-                "brand_b",
-                F.round(
-                    F.col("both_cnt")
-                    / F.sqrt(F.col("c_a").cast("double") * F.col("c_b")),
-                    8,
-                ).alias("cosine"),
-            )
-        )
-        sampled = tr.where(F.col("ck") % NDCG_SAMPLE_MOD == 0)
-        scored = (
-            sampled.withColumnRenamed("brand", "brand_a")
-            .join(F.broadcast(sim), "brand_a")
-            .select("ck", F.col("brand_b").alias("brand"), "cosine")
-        )
-        cand = (
-            scored.join(sampled, ["ck", "brand"], "left_anti")
-            .groupBy("ck", "brand")
-            .agg(F.max("cosine").alias("score"))
-        )
-        cw = Window.partitionBy("ck").orderBy(F.desc("score"), F.asc("brand"))
-        return cand.select(
-            "ck", "brand", F.row_number().over(cw).alias("rnk")
-        ).where(F.col("rnk") <= NDCG_K)
-
-    ranked = plan_memo(
-        spark, ("temporal_ranked", sf_dir), build_ranked
-    ).persist()
-    return ranked, _temporal_new_rel(spark, sf_dir)
+    )
+    sampled = tr.where(F.col("ck") % NDCG_SAMPLE_MOD == 0)
+    scored = (
+        sampled.withColumnRenamed("brand", "brand_a")
+        .join(F.broadcast(sim), "brand_a")
+        .select("ck", F.col("brand_b").alias("brand"), "cosine")
+    )
+    cand = (
+        scored.join(sampled, ["ck", "brand"], "left_anti")
+        .groupBy("ck", "brand")
+        .agg(F.max("cosine").alias("score"))
+    )
+    cw = Window.partitionBy("ck").orderBy(F.desc("score"), F.asc("brand"))
+    return cand.select(
+        "ck", "brand", F.row_number().over(cw).alias("rnk")
+    ).where(F.col("rnk") <= NDCG_K)
 
 
 # --- Recommendation exposure metrics: catalog coverage + Gini ----------------
@@ -1403,7 +1371,8 @@ def q_map_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     100-TB shape: identical to ``ndcg_eval`` — vocabulary-bounded model,
     one ck shuffle for relevance, <= |V| candidate rows per customer;
     the AP window runs inside the <= {NDCG_K}-row per-customer rank list."""
-    ranked, new_rel = _temporal_ranked(spark, sf_dir)
+    ranked = _temporal_ranked(spark, sf_dir)
+    new_rel = _temporal_new_rel(spark, sf_dir)
     hits = ranked.join(
         new_rel.withColumn("rel_hit", F.lit(1)), ["ck", "brand"], "left"
     ).select("ck", "rnk", F.coalesce(F.col("rel_hit"), F.lit(0)).alias("rel"))

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..operators.planmemo import shared_view
 from ..operators.simulator import (
     aggregate_strategies,
     best_by,
@@ -39,6 +40,7 @@ AGG_GRID = {
 }
 
 
+@shared_view(persist=StorageLevel.MEMORY_AND_DISK)
 def agged_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared sim->aggregate subtree on the oracle grid, persisted
     lazily. The selection queries over it (reco x3, buy_candidates,
@@ -65,15 +67,11 @@ def agged_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     (verified bit-exact by pandas frame equality and the consumer
     oracles; pinned by tests/test_search_years.py::
     test_agged_view_is_years_all_slice)."""
-    from ..operators.planmemo import plan_memo
-
-    return plan_memo(
-        spark,
-        ("agged_view", sf_dir),
-        lambda: agged_years_view(spark, sf_dir)
+    return (
+        agged_years_view(spark, sf_dir)
         .where(F.col("search_years") == "all")
-        .drop("search_years"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+        .drop("search_years")
+    )
 
 
 def _sim_cte(grid: dict, years: list | None = None) -> str:
@@ -287,6 +285,7 @@ def q_strategy_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agged_view(spark, sf_dir)
 
 
+@shared_view(persist=StorageLevel.MEMORY_AND_DISK)
 def agged_years_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The search-years-keyed sim->aggregate subtree shared by the three
     best_* queries (persisted lazily, same plan-matched caching rationale as
@@ -304,16 +303,11 @@ def agged_years_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay form, so the driver gate re-proves the semantics on every run.
     Plan A (``simulate_trades(years=...)`` -> ``aggregate_strategies``)
     remains the Catalyst path, exercised by best_return_depth3."""
-    from ..operators.planmemo import plan_memo
     from ..operators.simulator_pandas import simulate_aggregate_pandas
 
-    return plan_memo(
-        spark,
-        ("agged_years_view", sf_dir),
-        lambda: simulate_aggregate_pandas(
-            cci_view(spark, sf_dir), AGG_GRID, years=BEST_YEARS
-        ),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    return simulate_aggregate_pandas(
+        cci_view(spark, sf_dir), AGG_GRID, years=BEST_YEARS
+    )
 
 
 def _best_query(metric: str):

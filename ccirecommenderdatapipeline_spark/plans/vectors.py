@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..operators.planmemo import shared_view
 from ..operators.vectors import (
     assign_to_centroids,
     cosine,
@@ -889,6 +890,7 @@ def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _cov_view(spark, sf_dir)
 
 
+@shared_view(persist=StorageLevel.MEMORY_AND_DISK)
 def _cov_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared covariance subtree, PERSISTED (lazily) because two
     registered queries consume it: ``embedding_covariance`` itself and
@@ -898,17 +900,7 @@ def _cov_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside a single pca plan Spark's ReuseExchange already dedups the
     repeated subtree — the persist extends that across queries).
     Standard clearCache contract (tools/check_oracle.py clears between
-    queries; bench.py deliberately keeps it warm). The built lazy plan
-    is memoized per session (operators/planmemo.py); persist re-applies
-    on every return."""
-    from ..operators.planmemo import plan_memo
-
-    return plan_memo(
-        spark, ("_cov_view", sf_dir), lambda: _build_cov_view(spark, sf_dir)
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-
-def _build_cov_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    queries; bench.py deliberately keeps it warm)."""
     vecs = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )

@@ -28,22 +28,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.planmemo import shared_view
 from .tables import load_table
 
 
+@shared_view()
 def prices_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per (symbol, date): symbol, date, open_pr, high_pr, low_pr,
     close_pr, daily_trade_stock. Mirrors daily_function.py:415-420's canonical
-    rename target. The built lazy plan is memoized per session (~40
-    queries embed this chain; see operators/planmemo.py)."""
-    from ..operators.planmemo import plan_memo
-
-    return plan_memo(
-        spark, ("prices_view", sf_dir), lambda: _build_prices_view(spark, sf_dir)
-    )
-
-
-def _build_prices_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    rename target. A shared view: ~40 queries embed this chain."""
     li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy(

@@ -7,7 +7,10 @@ One runner: every job starts its query through :func:`run_stream` — the
 only writeStream -> trigger(availableNow) -> checkpoint -> awaitTermination
 site in the package (tests/test_streaming.py pins that). It writes to a
 memory sink (``run_to_memory``) or to a ``foreachBatch`` writer, and a
-checkpoint it generated itself is deleted once the query terminates.
+checkpoint it generated itself is deleted once the query terminates. A
+registered job that needs a checkpoint or sink dir of its own runs in
+``run_held``, which holds the small result with ``localCheckpoint`` and then
+removes the dir, so no call leaves one behind.
 Around it sit one file-source reader (``events_stream``), one staging
 helper (``_stage``: output path keyed on the source's absolute path, plus
 an idempotence marker) and one additively-merged versioned view
@@ -38,7 +41,6 @@ import glob
 import hashlib
 import os
 import shutil
-import tempfile
 import time
 import uuid
 from collections.abc import Callable
@@ -168,6 +170,18 @@ def _run_dir(tag: str) -> str:
     view versions) — it outlives the call, since the returned DataFrame
     reads it lazily."""
     return os.path.join(STAGE_ROOT, f"{tag}_{uuid.uuid4().hex[:10]}")
+
+
+def run_held(tag: str, run: Callable[[str], DataFrame]) -> DataFrame:
+    """``run(d)`` on a fresh ``_run_dir`` ``d`` (a checkpoint, or a sink's
+    output), its small result held by ``localCheckpoint``; then ``d`` and
+    ``d + "_capture"`` are removed, so nothing outlives the call."""
+    d = _run_dir(tag)
+    try:
+        return run(d).localCheckpoint(eager=True)
+    finally:
+        for path in (d, d + "_capture"):
+            shutil.rmtree(path, ignore_errors=True)
 
 
 def stage_events_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
@@ -532,14 +546,15 @@ def stream_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one micro-batch per file), and return the FINAL per-user state as a
     DataFrame. The final state is the total event count per user — invariant
     to micro-batch boundaries — so the plain batch GROUP BY is an exact
-    oracle for the stateful streaming execution. The capture dir outlives
-    the call (the returned DataFrame reads it lazily)."""
+    oracle for the stateful streaming execution. The checkpoint and its
+    capture are removed once the per-user result is held."""
     staged = stage_events_dir(spark, sf_dir)
-    checkpoint = tempfile.mkdtemp(prefix="stateful_counts_ckpt_")
-    final = stateful_user_counts(spark, staged, checkpoint)
-    return final.select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.col("n_events").cast("long").alias("n_events"),
+    return run_held(
+        "stateful_counts_ckpt",
+        lambda ckpt: stateful_user_counts(spark, staged, ckpt).select(
+            F.col("user_id").cast("long").alias("user_id"),
+            F.col("n_events").cast("long").alias("n_events"),
+        ),
     )
 
 
@@ -582,23 +597,18 @@ def stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep-last tie among them cannot change values, and the final view must
     equal the single-copy batch table exactly."""
     staged = stage_events_dir(spark, sf_dir)
-    target = tempfile.mkdtemp(prefix="merge_upsert_target_")
-    try:
+
+    def run(target: str) -> DataFrame:
         sdf = events_stream(spark, staged, maxFilesPerTrigger=2)
         doubled = sdf.unionByName(sdf)  # at-least-once: every row twice
         run_stream(doubled, foreach_batch=upsert_foreach_batch(target))
         final = read_upsert_target(spark, target, key="event_id")
-        return (
-            final.groupBy("event_type")
-            .agg(
-                F.count("*").alias("n_events"),
-                exact_value_sum().alias("sum_value"),
-            )
-            # collect before the target dir vanishes: tiny (5 rows)
-            .localCheckpoint(eager=True)
+        return final.groupBy("event_type").agg(
+            F.count("*").alias("n_events"),
+            exact_value_sum().alias("sum_value"),
         )
-    finally:
-        shutil.rmtree(target, ignore_errors=True)
+
+    return run_held("merge_upsert_target", run)
 
 
 def tws_user_stats(spark: SparkSession, staged_dir: str, checkpoint: str) -> DataFrame:
@@ -720,16 +730,8 @@ def tws_user_stats(spark: SparkSession, staged_dir: str, checkpoint: str) -> Dat
 def stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered-query form of ``tws_user_stats``, on a checkpoint of its
     own that is removed, with its capture, once the result is held."""
-    ckpt = _run_dir("tws_ckpt")
-    try:
-        return (
-            tws_user_stats(spark, stage_events_dir(spark, sf_dir), ckpt)
-            # collect before the capture dir vanishes: one row per user
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        for d in (ckpt, ckpt + "_capture"):
-            shutil.rmtree(d, ignore_errors=True)
+    staged = stage_events_dir(spark, sf_dir)
+    return run_held("tws_ckpt", lambda ckpt: tws_user_stats(spark, staged, ckpt))
 
 
 def stage_events_with_sentinel(spark: SparkSession, sf_dir: str) -> str:

@@ -366,3 +366,36 @@ def test_restart_from_checkpoint_equals_oneshot(spark, tmp_path, job):
     # runs, none replayed from scratch
     commits = [c for c in os.listdir(os.path.join(ckpt, "commits")) if c.isdigit()]
     assert sorted(map(int, commits)) == list(range(len(files)))
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["stream_stateful_counts", "stream_execution_feed", "order_ledger_roundtrip"],
+)
+def test_registered_jobs_leave_no_scratch_dirs(spark, tmp_path, monkeypatch, name):
+    """A registered job owns its checkpoint, capture, staging or ledger dir:
+    the call leaves TMPDIR and STAGE_ROOT as it found them (the staged
+    inputs, made before the snapshot, aside), and the result it returns
+    is still readable once those dirs are gone."""
+    from ccirecommenderdatapipeline_spark.plans import QUERIES
+    from ccirecommenderdatapipeline_spark.streaming import jobs
+
+    tmp, stage = tmp_path / "tmp", tmp_path / "stage"
+    tmp.mkdir()
+    monkeypatch.setenv("TMPDIR", str(tmp))
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp))
+    monkeypatch.setattr(jobs, "STAGE_ROOT", str(stage))
+    stage_events_dir(spark, SF_SMALL)
+
+    def tree():
+        return sorted(
+            os.path.join(root, d)
+            for top in (tmp, stage)
+            for root, dirs, _files in os.walk(top)
+            for d in dirs
+        )
+
+    before = tree()
+    out = QUERIES[name](spark, SF_SMALL)
+    assert tree() == before
+    assert out.count() > 0
